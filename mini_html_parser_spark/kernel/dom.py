@@ -1,4 +1,4 @@
-"""Lenient HTML DOM builder on stdlib ``html.parser``.
+"""Lenient HTML DOM builder driven by :mod:`.fast_scan`.
 
 Replaces the reference's dependency on ``lxml.html.fromstring``
 (reference: html_parser.py:431,448) with a pure-stdlib parser that
@@ -16,9 +16,8 @@ children/``parent``.
 
 from __future__ import annotations
 
-from html.parser import HTMLParser
-
 from .constants import AUTO_CLOSE, HEAD_TAGS, VOID_ELEMENTS
+from .fast_scan import scan
 
 COMMENT_TAG = "!comment"
 
@@ -50,19 +49,8 @@ class Node:
         node.parent = self
         self.children.append(node)
 
-    def remove(self, node: "Node"):
-        self.children.remove(node)
-        node.parent = None
-
     def getparent(self):
         return self.parent
-
-    def getprevious(self):
-        p = self.parent
-        if p is None:
-            return None
-        i = p.children.index(self)
-        return p.children[i - 1] if i > 0 else None
 
     def iter(self):
         yield self
@@ -105,11 +93,12 @@ def _valid_attr_name(name: str) -> bool:
     return c.isalpha() or c in "_:"
 
 
-class _DomParser(HTMLParser):
-    """Builds a full document tree with implicit html/head/body."""
+class _DomParser:
+    """Builds a full document tree with implicit html/head/body from
+    the ``handle_*`` events of :func:`.fast_scan.scan` (the same
+    callback names and arguments as ``html.parser.HTMLParser``)."""
 
     def __init__(self):
-        super().__init__(convert_charrefs=True)
         self.root = Node("html")
         self.head: Node | None = None
         self.body: Node | None = None
@@ -137,33 +126,13 @@ class _DomParser(HTMLParser):
     def _cur(self) -> Node:
         return self.stack[-1]
 
-    def _in_document_scope(self) -> bool:
-        """True while no head/body content has been opened yet."""
-        return len(self.stack) == 1 and self.stack[0] is self.root
-
     def _target_for_content(self, tag: str | None) -> Node:
         """Where should new content go when the stack is at <html> level."""
         if tag is not None and tag in HEAD_TAGS and self.body is None:
             return self._ensure_head()
         return self._ensure_body()
 
-    def _append_text(self, data: str):
-        cur = self._cur()
-        if cur is self.root:
-            # text at html level: whitespace before body is dropped,
-            # other text force-opens body (libxml2 behavior)
-            if self.body is None and not data.strip():
-                return
-            cur = self._ensure_body()
-            if self.body not in self.stack:
-                self.stack.append(self.body)
-        if cur.children:
-            last = cur.children[-1]
-            last.tail = (last.tail or "") + data
-        else:
-            cur.text = (cur.text or "") + data
-
-    # -- HTMLParser hooks ----------------------------------------------------
+    # -- scanner events -------------------------------------------------------
     def handle_starttag(self, tag, attrs):
         if tag == "html":
             # merge attributes into the synthetic root (keep-first)
@@ -261,12 +230,12 @@ class _DomParser(HTMLParser):
         self.malformed = True
 
     def handle_data(self, data):
-        # _append_text inlined (hottest text path: one call and one
-        # stack probe saved per text run)
         if not data:
             return
         cur = self.stack[-1]
         if cur is self.root:
+            # text at html level: whitespace before body is dropped,
+            # other text force-opens body (libxml2 behavior)
             if self.body is None and not data.strip():
                 return
             cur = self._ensure_body()
@@ -287,51 +256,15 @@ class _DomParser(HTMLParser):
         node.text = data
         cur.append(node)
 
-    def handle_decl(self, decl):
-        pass
 
-    def unknown_decl(self, data):
-        pass
-
-    # stdlib swallows an empty end tag '</>' silently; libxml2 emits a
-    # literal '>' text node instead (pinned by test_html_parser.py:578-583)
-    def parse_endtag(self, i):
-        rawdata = self.rawdata
-        if rawdata.startswith("</>", i):
-            self.handle_data(">")
-            self.malformed = True
-            return i + 3
-        return super().parse_endtag(i)
-
-
-def parse_document(html_str: str, fast: bool = True) -> tuple[Node, bool]:
+def parse_document(html_str: str) -> tuple[Node, bool]:
     """Parse ``html_str`` leniently into a full document tree.
 
     Returns ``(root, malformed)`` where ``root`` is the ``<html>``
     element (always present) and ``malformed`` flags recovery events
     (used for the north_rule "malformed-HTML fallbacks" metric).
-
-    ``fast=True`` drives the same DOM sink with the regex scanner of
-    :mod:`.fast_scan` (~2-3× faster than stdlib html.parser event
-    dispatch); any scanner error falls back to the stdlib path and
-    counts as a malformed-recovery event.
     """
-    if fast:
-        from . import fast_scan
-
-        p = _DomParser()
-        try:
-            fast_scan.scan(html_str, p)
-            p._ensure_body()
-            return p.root, p.malformed
-        except Exception:
-            pass  # fall through to the stdlib reference path
-
     p = _DomParser()
-    try:
-        p.feed(html_str)
-        p.close()
-    except Exception:
-        p.malformed = True
+    scan(html_str, p)
     p._ensure_body()
     return p.root, p.malformed

@@ -32,7 +32,7 @@ import sys
 from collections import defaultdict
 from dataclasses import dataclass
 
-from .config import ExtractionConfig, TagToRemove, TagToRemoveWithContent
+from .config import ExtractionConfig, TagToRemove
 from .constants import (
     BLOCK_CONTENT_SEPARATOR,
     BLOCK_ELEMENTS,
@@ -46,7 +46,7 @@ from .constants import (
     PRESERVE_WHITESPACE_TAGS,
 )
 from .dom import COMMENT_TAG, Node, parse_document
-from .minify import _collapse, minify_tree
+from .minify import _collapse, _minify, minify_tree
 
 _FAKE_TAGS = (FAKE_TAG_BLOCK, FAKE_TAG_INLINE, FAKE_TAG_BASIC)
 # shared empty attrs/attr_values for attribute-less nodes (never
@@ -122,26 +122,32 @@ class TagFilter:
                     f"invalid removal method {t.method!r} for tag {t.tag!r}; "
                     "valid methods are 'top-down' and 'bottom-up'"
                 )
-        self._td_memo: dict = {}
-        self._bu_memo: dict = {}
-        self._alone_drop_set: frozenset | None = None
+        self.alone_drop_set: frozenset = frozenset()
+        self.alone_needs_length = False
 
     def finalize(self) -> None:
-        """Precompute the tag-only span-drop fast path.  Valid when the
-        drop decision cannot depend on span length: every alone-rule
-        has trivial bounds [<=0, inf] (always true for n>=0) and the
-        global alone threshold is disabled (max = -inf never admits
-        any n).  All NAMED_CONFIGS qualify.  Must be called after the
-        last alone-rule registration (the synthetic ``html`` wrapper
-        rule — see _Extractor.__init__)."""
+        """Split span dropping into its tag-only part and the rest.
+
+        ``alone_drop_set`` holds the tags whose alone-rule has trivial
+        bounds [<=0, inf]: their spans are dropped at any length
+        (n >= 0), so linearization never materializes them.
+        ``alone_needs_length`` is True when some other drop depends on
+        the span length (a rule with real bounds, or the global alone
+        threshold enabled — max > -inf), which only the finished span
+        knows; linearization then filters with :meth:`drop_span`
+        afterwards.  No NAMED_CONFIGS entry needs length.  Must be
+        called after the last alone-rule registration (the synthetic
+        ``html`` wrapper rule — see _Extractor.__init__)."""
         inf = float("inf")
-        if self.txt_max_chr_len_alone == -inf and all(
-            r.content_min_char_length <= 0 and r.content_max_char_length == inf
-            for r in self.tags_to_remove_alone.values()
-        ):
-            self._alone_drop_set = frozenset(self.tags_to_remove_alone)
-        else:
-            self._alone_drop_set = None
+        trivial = {
+            tag for tag, r in self.tags_to_remove_alone.items()
+            if r.content_min_char_length <= 0 and r.content_max_char_length == inf
+        }
+        self.alone_drop_set = frozenset(trivial)
+        self.alone_needs_length = (
+            self.txt_max_chr_len_alone > -inf
+            or len(trivial) != len(self.tags_to_remove_alone)
+        )
 
     def drop_span(self, span: Span) -> bool:
         # reference: html_parser.py:195-220
@@ -187,14 +193,9 @@ class TagFilter:
     # rule and global thresholds disabled — the production configs),
     # the text is never needed.  decide_* returns (verdict, needs_text);
     # when needs_text is True the caller re-asks with the real text.
+    # Both are pure functions of the tag (the caller memoizes them).
 
     def decide_top_down(self, tag: str) -> tuple[bool, bool]:
-        r = self._td_memo.get(tag)
-        if r is None:
-            r = self._td_memo[tag] = self._decide_top_down_uncached(tag)
-        return r
-
-    def _decide_top_down_uncached(self, tag: str) -> tuple[bool, bool]:
         rule = self.tags_to_remove_with_content.get(tag)
         if rule is not None and rule.method != "top-down":
             return False, False
@@ -210,12 +211,6 @@ class TagFilter:
         return False, False
 
     def decide_bottom_up(self, tag: str) -> tuple[bool, bool]:
-        r = self._bu_memo.get(tag)
-        if r is None:
-            r = self._bu_memo[tag] = self._decide_bottom_up_uncached(tag)
-        return r
-
-    def _decide_bottom_up_uncached(self, tag: str) -> tuple[bool, bool]:
         rule = self.tags_to_remove_with_content.get(tag)
         if rule is None or rule.method != "bottom-up":
             return False, False
@@ -315,53 +310,6 @@ def _splice_tail_on_removal(node: Node, kept_siblings: list, parent: Node) -> No
             parent.text = parent.text + node.tail
 
 
-def _splice_tail_before_delete(node: Node) -> None:
-    """In-tree variant of the splice (kept for remove_keeping_tail's
-    public form; reference: html_parser.py:316-363)."""
-    if not node.tail:
-        return
-    sep = PLAIN_TEXT_SEPARATOR
-    previous = node.getprevious()
-    if previous is not None:
-        if previous.tail is None:
-            previous.tail = node.tail
-        elif (
-            previous.text
-            and not previous.text.endswith(sep)
-            and not node.tail.startswith(sep)
-        ):
-            previous.text = previous.text + sep + node.tail
-        elif (
-            previous.text
-            and previous.text.endswith(sep)
-            and node.tail.startswith(sep)
-        ):
-            previous.text = previous.text[: -len(sep)] + node.tail
-        elif (
-            previous.tail
-            and not previous.tail.endswith(sep)
-            and not node.tail.startswith(sep)
-        ):
-            previous.tail = previous.tail + sep + node.tail
-        else:
-            previous.tail = previous.tail + node.tail
-    else:
-        parent = node.getparent()
-        if parent.text is None:
-            parent.text = node.tail
-        elif not parent.text.endswith(sep) and not node.tail.startswith(sep):
-            parent.text = parent.text + sep + node.tail
-        elif parent.text.endswith(sep) and node.tail.startswith(sep):
-            parent.text = parent.text[: -len(sep)] + node.tail
-        else:
-            parent.text = parent.text + node.tail
-
-
-def remove_keeping_tail(node: Node) -> None:
-    _splice_tail_before_delete(node)
-    node.getparent().remove(node)
-
-
 def _text_and_link_chars(node: Node) -> tuple[int, int]:
     """(all text chars, text chars under ``<a>`` descendants) of the
     subtree rooted at ``node`` — the two numbers link-density scoring
@@ -400,32 +348,17 @@ class _Extractor:
         self.tag_filter = TagFilter(cfg, alone)
         # the synthetic <html> wrapper's span-drop rule (reference:
         # html_parser.py:437-443) is registered up-front so the
-        # tag-only drop fast path can be finalized once; run() no
-        # longer mutates the rule table per document (the extractor is
-        # reusable across documents — see make_extract_fn)
+        # span-drop split can be finalized once; run() never mutates
+        # the rule table (the extractor is reusable across documents —
+        # see make_extract_fn)
         if cfg.start_parsing_at_tag is not None:
             self.tag_filter.tags_to_remove_alone["html"] = TagToRemove("html")
         self.tag_filter.finalize()
-        # per-tag separator action memo for _add_text (1 dict lookup
-        # instead of up to 2 frozenset probes per node event)
+        # per-tag separator action memo for _linearize_fast (1 dict
+        # lookup instead of up to 2 frozenset probes per node event)
         self._sep_act: dict = {}
         self._tag_decide: dict = {}
         self._br_newline = cfg.convert_br_tag_to_breaking_line
-        # the minify pass can fuse into the rewrite walk only when NO
-        # subtree-removal decision reads the subtree text (descendants
-        # are not yet minified when a fused top-down decision fires):
-        # every with-content rule has trivial bounds and the global
-        # with-content threshold is disabled — true for all
-        # NAMED_CONFIGS
-        inf = float("inf")
-        self._fused_rewrite_ok = (
-            self.tag_filter.txt_max_chr_len_with_content == -inf
-            and all(
-                t.content_min_char_length <= 0
-                and t.content_max_char_length == inf
-                for t in self.tag_filter.tags_to_remove_with_content.values()
-            )
-        )
         self.density_cfg = cfg.density_prune
         self.density_tags = (
             frozenset(cfg.density_prune.candidate_tags)
@@ -433,87 +366,29 @@ class _Extractor:
             else frozenset()
         )
 
-    # ---- tree rewriting (reference: html_parser.py:583-607) ---------------
+    # ---- minify + tree rewriting (reference: html_parser.py:446,583-607)
     # Parent-managed deletion: a node signals "remove me" via return
     # value and the parent splices its tail and rebuilds the child
     # list once — identical observable semantics to the reference's
     # self-removal (lxml child iterators pre-fetch the next sibling,
     # so a child removing itself never skips its successor), but O(1)
     # per removal instead of list.remove's O(children) identity scan.
-    def _clean_tree(self, root: Node) -> bool:
-        # both fold branches require exactly one child — skip the call
-        # (and its own re-checks) for every other node
-        if len(root.children) == 1:
-            self.folder(root)
-
-        tag = root.tag
-        # one memoized 4-tuple per tag instead of two dict probes per
-        # node (decisions are pure functions of the tag — TagFilter
-        # decide_* docstrings)
-        d = self._tag_decide.get(tag)
-        if d is None:
-            d = self._tag_decide[tag] = (
-                *self.tag_filter.decide_top_down(tag),
-                *self.tag_filter.decide_bottom_up(tag),
-            )
-        drop, needs_text = d[0], d[1]
-        if needs_text:
-            drop = self.tag_filter.drop_subtree_top_down(tag, root.subtree_text())
-        if drop:
-            return True
-
-        if root.children:
-            kept: list[Node] = []
-            changed = False
-            for child in root.children:
-                if self._clean_tree(child):
-                    _splice_tail_on_removal(child, kept, root)
-                    changed = True
-                else:
-                    kept.append(child)
-            if changed:
-                root.children = kept
-
-        drop, needs_text = d[2], d[3]
-        if needs_text:
-            drop = self.tag_filter.drop_subtree_bottom_up(tag, root.subtree_text())
-        if drop:
-            return True
-
-        # text/link-density scoring (north-star heuristic; config.py
-        # DensityPruneConfig).  Scored AFTER the children pass on
-        # purpose: tag-rule removals (script/style/…) and inner
-        # density prunes have already been applied, so a nav bar
-        # padded with a 300-char <script> is judged on its links
-        # alone, not diluted by code that is about to be deleted
-        # anyway.  Pruning still removes the whole (cleaned) subtree
-        # with the same tail-preserving splice.  Cost is one walk of
-        # the cleaned subtree per candidate — O(depth × size) worst
-        # case on nested-div chains, O(size) on typical trees.
-        if self.density_cfg is not None and root.tag in self.density_tags:
-            n_text, n_link = _text_and_link_chars(root)
-            dp = self.density_cfg
-            if (n_text > 0 and n_link / n_text >= dp.max_link_density) or (
-                n_text < dp.min_text_length and n_link > 0
-            ):
-                return True
-        return False
-
     def _minify_clean_tree(self, root: Node, in_pre: bool) -> bool:
-        """Fused minify + rewrite pass: ONE traversal instead of
-        minify_tree's walk followed by _clean_tree's, and subtrees
-        dropped top-down are never minified at all (their contents are
-        about to be deleted — script/style/header/footer/form bodies
-        under boilerplate_strip).
+        """Fused minify + rewrite pass: ONE traversal that yields the
+        reference's minify-then-rewrite result, and subtrees dropped
+        top-down by a tag rule are never minified at all (their
+        contents are about to be deleted — script/style/header/
+        footer/form bodies under boilerplate_strip).
 
-        Validity (``_fused_rewrite_ok``): every subtree-removal
-        decision must be text-free, because descendants are not yet
-        minified when this node's top-down decision fires.  Ordering
-        equivalence with minify-then-clean for the remaining steps:
+        Ordering equivalence with minifying the whole tree first:
 
         * comment-strip/collapse are node-local, and a comment tail
           always merges into its neighbour raw, before that
           neighbour's own visit collapses it;
+        * a length-dependent decision (``needs_text``) measures a
+          subtree whose descendants have not been visited yet, so it
+          first minifies this node's children eagerly (``_minify`` is
+          idempotent, so their own visits later change nothing);
         * the fold rewriter reads only tags/attribs (minify-independent);
         * a removed child's tail was collapsed at the child's own
           entry (the minify-local step runs before the drop verdict),
@@ -524,8 +399,8 @@ class _Extractor:
         * inside preserved (``<pre>``) subtrees nothing collapses but
           comments still strip and rewrite rules still apply, exactly
           as in the unfused order;
-        * the density score runs post-children over the cleaned,
-          minified subtree, as before.
+        * bottom-up decisions and the density score run post-children
+          over the cleaned, minified subtree.
         """
         kids = root.children
         if kids:
@@ -554,18 +429,28 @@ class _Extractor:
             else:
                 root.text = _collapse(root.text)
 
+        # both fold branches require exactly one child — skip the call
+        # (and its own re-checks) for every other node
         if len(kids) == 1:
             self.folder(root)
 
         tag = root.tag
+        # one memoized 4-tuple per tag instead of two dict probes per
+        # node (decisions are pure functions of the tag — TagFilter
+        # decide_* docstrings)
         d = self._tag_decide.get(tag)
         if d is None:
             d = self._tag_decide[tag] = (
                 *self.tag_filter.decide_top_down(tag),
                 *self.tag_filter.decide_bottom_up(tag),
             )
-        if d[0]:  # d[1]/d[3] are always False under _fused_rewrite_ok
+        if d[0]:
             return True
+        if d[1]:
+            for child in kids:
+                _minify(child, in_pre)
+            if self.tag_filter.drop_subtree_top_down(tag, root.subtree_text()):
+                return True
 
         if kids:
             kept: list[Node] = []
@@ -579,9 +464,21 @@ class _Extractor:
             if changed:
                 root.children = kept
 
-        if d[2]:
+        if d[2] or (
+            d[3] and self.tag_filter.drop_subtree_bottom_up(tag, root.subtree_text())
+        ):
             return True
 
+        # text/link-density scoring (north-star heuristic; config.py
+        # DensityPruneConfig).  Scored AFTER the children pass on
+        # purpose: tag-rule removals (script/style/…) and inner
+        # density prunes have already been applied, so a nav bar
+        # padded with a 300-char <script> is judged on its links
+        # alone, not diluted by code that is about to be deleted
+        # anyway.  Pruning still removes the whole (cleaned) subtree
+        # with the same tail-preserving splice.  Cost is one walk of
+        # the cleaned subtree per candidate — O(depth × size) worst
+        # case on nested-div chains, O(size) on typical trees.
         if self.density_cfg is not None and tag in self.density_tags:
             n_text, n_link = _text_and_link_chars(root)
             dp = self.density_cfg
@@ -646,68 +543,18 @@ class _Extractor:
         ):
             self._buf_append(PLAIN_TEXT_SEPARATOR)
 
-    def _add_text(self, tag: str, new_text) -> None:
-        act = self._sep_act.get(tag)
-        if act is None:
-            act = self._sep_act[tag] = (
-                1 if tag in self.block_elements_set
-                else 2 if tag in _INLINE_SET
-                else 0
-            )
-        if act == 1:
-            self._append_block_separator()
-        elif act == 2:
-            self._append_inline_separator()
-        if new_text:
-            self._append_text_content(new_text)
-        self._char_idx = self._len
-
-    def _linearize(self, root: Node) -> None:
-        self.current_tag = root.tag
-
-        attrs, values = self.attr_cleaner(root.attrib)
-        span = Span(
-            char_start_idx=self._char_idx,
-            relative_start_pos=self._pos_counter[self._char_idx],
-            value=root.tag,
-            attrs=attrs,
-            attr_values=values,
-            kind="media" if root.tag in MEDIA_TAGS else "text",
-            media_ref=root.attrib.get("src", "") if root.tag in MEDIA_TAGS else "",
-        )
-        self._pos_counter[self._char_idx] += 1
-
-        if self.cfg.convert_br_tag_to_breaking_line and root.tag == "br":
-            self._buf_append("\n")  # reference: html_parser.py:470-472
-
-        self._add_text(root.tag, root.text)
-        for child in root.children:
-            self._linearize(child)
-        self.current_tag = root.tag
-
-        span.char_end_idx = self._char_idx
-        span.relative_end_pos = self._pos_counter[self._char_idx]
-        self._pos_counter[self._char_idx] += 1
-
-        self._add_text(root.tag, root.tail)
-
-        if not self.tag_filter.drop_span(span):
-            self.spans.append(span)
-
     def _linearize_fast(self, root: Node) -> None:
-        """``_linearize`` specialized for tag-only span dropping
-        (``TagFilter._alone_drop_set`` is not None — true for all
-        NAMED_CONFIGS, where every alone-rule has trivial bounds and
-        the global alone threshold is disabled).
+        """Single-pass DFS linearization with inline renumbering.
 
         ``_char_idx`` is nondecreasing over the DFS, so span events
-        already occur ordered by (char_idx, emission order) — exactly
-        the order ``_renumber`` + the final document-order sort
-        reconstruct.  Relative positions and offsets are therefore
-        assigned inline and the two-phase renumbering machinery is
-        skipped entirely.  Dropped-by-tag spans never consume a
-        position slot (matching ``_renumber``, which only numbers kept
-        spans) and are never materialized at all.
+        already occur ordered by (char_idx, emission order): relative
+        positions count the spans emitted so far at the current
+        char_idx, and ``offset`` is the span's preorder rank, which is
+        its (char_start_idx, relative_start_pos) document order.
+        Spans of ``TagFilter.alone_drop_set`` tags never consume a
+        position slot and are never materialized at all; the other
+        span drops need the span's length and are applied by
+        :meth:`_drop_by_length` after the walk.
         """
         tag = root.tag
         self.current_tag = tag
@@ -736,8 +583,6 @@ class _Extractor:
         if self._br_newline and tag == "br":
             self._buf_append("\n")  # reference: html_parser.py:470-472
 
-        # _add_text inlined (the two hottest call sites; the general
-        # _linearize path keeps the method)
         act = self._sep_act.get(tag)
         if act is None:
             act = self._sep_act[tag] = (
@@ -778,6 +623,18 @@ class _Extractor:
         self._char_idx = self._len
 
     # ---- relative-position renumbering (reference: html_parser.py:474-494)
+    def _drop_by_length(self) -> None:
+        """Post-pass for length-dependent span drops: filter with
+        ``drop_span``, close the position gaps the dropped spans leave
+        (``_renumber``), and re-rank ``offset`` over the kept spans in
+        the walk's preorder."""
+        drop_span = self.tag_filter.drop_span
+        spans = [s for s in self.spans if not drop_span(s)]
+        self._renumber(spans)
+        for rank, s in enumerate(sorted(spans, key=lambda s: s.offset)):
+            s.offset = rank
+        self.spans = spans
+
     @staticmethod
     def _renumber(spans: list) -> None:
         by_idx: dict = defaultdict(dict)
@@ -818,11 +675,7 @@ class _Extractor:
             or self.tag_filter.txt_max_chr_len_with_content > -float("inf")
         ):
             # root itself is never removable here
-            if self._fused_rewrite_ok:
-                self._minify_clean_tree(root, False)
-            else:
-                minify_tree(root)
-                self._clean_tree(root)
+            self._minify_clean_tree(root, False)
         else:
             minify_tree(root)
 
@@ -831,33 +684,14 @@ class _Extractor:
         self._parts: list[str] = []
         self._len = 0
         self._last = ""
-        if self.tag_filter._alone_drop_set is not None:
-            # tag-only span dropping: single-pass linearization with
-            # inline renumbering (see _linearize_fast docstring)
-            self._last_idx = -1
-            self._ctr = 0
-            self._rank = 0
-            self._drop_set = self.tag_filter._alone_drop_set
-            self._linearize_fast(root)
-            self.text = "".join(self._parts)
-            return ExtractResult(self.text, self.spans, malformed)
-
-        self._pos_counter: dict = defaultdict(int)
-        self._linearize(root)
+        self._last_idx = -1
+        self._ctr = 0
+        self._rank = 0
+        self._drop_set = self.tag_filter.alone_drop_set
+        self._linearize_fast(root)
         self.text = "".join(self._parts)
-
-        self._renumber(self.spans)
-
-        order = sorted(
-            range(len(self.spans)),
-            key=lambda i: (
-                self.spans[i].char_start_idx,
-                self.spans[i].relative_start_pos,
-            ),
-        )
-        for rank, i in enumerate(order):
-            self.spans[i].offset = rank
-
+        if self.tag_filter.alone_needs_length:
+            self._drop_by_length()
         return ExtractResult(self.text, self.spans, malformed)
 
 
@@ -867,14 +701,7 @@ def extract(html_str: str, cfg: ExtractionConfig | None = None) -> ExtractResult
     Public scalar entry point — the analogue of the reference's
     ``get_clean_text_and_metadata`` (html_parser.py:610-639).
     """
-    if cfg is None:
-        cfg = ExtractionConfig()
-    if sys.getrecursionlimit() < _MIN_RECURSION:
-        sys.setrecursionlimit(_MIN_RECURSION)
-    try:
-        return _Extractor(cfg).run(html_str)
-    except RecursionError:
-        return ExtractResult("", [], malformed=True)
+    return make_extract_fn(cfg)(html_str)
 
 
 def make_extract_fn(cfg: ExtractionConfig | None = None):
@@ -883,7 +710,7 @@ def make_extract_fn(cfg: ExtractionConfig | None = None):
 
     The per-document constructor work (frozensets, rule tables, memo
     dicts) is paid once per Spark task instead of once per row, and
-    the TagFilter/decide memos stay warm across documents (guide §4.5
+    the per-tag decision memos stay warm across documents (guide §4.5
     heavyweight-init-once-per-task).  ``_Extractor.run`` resets all
     per-document state, so reuse is safe.
     """

@@ -1,24 +1,25 @@
 """Fast HTML scanner — a slim tokenizer frontend over the stdlib
 ``html.parser`` matchers.
 
-Drives the same DOM-builder sink as the stdlib ``html.parser`` path
-(dom._DomParser), emitting the identical event stream, at a
-measurable speedup: stdlib HTMLParser pays ``updatepos`` line
+Drives the DOM-builder sink (dom._DomParser) with the event stream
+the stdlib ``html.parser`` would emit, at a measurable speedup:
+stdlib HTMLParser pays ``updatepos`` line
 bookkeeping (an O(chunk) newline count per event), ``interesting``
 re-searches, rawdata re-slicing and method dispatch per construct,
 which dominates kernel time on large documents.  This scanner walks
 the document once with ``str.find`` and drives the sink directly.
 
 Equivalence contract (pinned by the golden suite, the 2012-span wiki
-fixture, and randomized cross-checks in tests/test_fast_scan.py):
+fixture, and randomized cross-checks in tests/test_fast_scan.py
+against the stdlib-driven sink in tests/kernel_oracle.py):
 every construct is parsed with the stdlib's OWN tolerant matchers
 (``tagfind_tolerant``/``attrfind_tolerant``/
 ``locatestarttagend_tolerant``/``endtagfind``) and the control flow
 mirrors ``HTMLParser.goahead``/``parse_starttag``/``parse_endtag``
 for a single ``feed(doc); close()`` cycle:
 
-* ``</>`` emits a literal ``>`` text event (the dom.py parse_endtag
-  override — lxml recovery pinned by test_html_parser.py:578-583),
+* ``</>`` emits a literal ``>`` text event and sets ``malformed``
+  (lxml recovery pinned by test_html_parser.py:578-583),
 * character references resolve in text and attribute values but NOT
   inside script/style raw text (stdlib ``convert_charrefs``),
 * a ``<`` that doesn't open a construct is literal text; incomplete
@@ -37,8 +38,13 @@ for a single ``feed(doc); close()`` cycle:
 * doctypes/processing instructions are consumed silently; other
   ``<!…>`` declarations become bogus comments (stdlib
   parse_html_declaration),
-* ``<![…`` marked sections raise :class:`Bailout` — the caller falls
-  back to the stdlib path, so equivalence holds by construction.
+* ``<![…`` marked sections mirror ``_markupbase.parse_marked_section``
+  and ``_scan_name``: ``<![cdata|temp|ignore|include|rcdata`` skips
+  to the next ``]]>``, ``<![if|else|endif`` to the next ``]>``, both
+  silently; an unterminated one is EOF-recovered like any incomplete
+  construct.  Where the stdlib raises (no name after ``<![``, or an
+  unknown keyword) the scan stops there: everything before it is
+  kept and ``malformed`` is set.
 """
 
 from __future__ import annotations
@@ -114,11 +120,14 @@ _RAW_CLOSE_RE = {
 
 _NEXT_IN_INCOMPLETE = frozenset("abcdefghijklmnopqrstuvwxyz=/ABCDEFGHIJKLMNOPQRSTUVWXYZ")
 
-
-class Bailout(Exception):
-    """Construct too rare to fast-path (e.g. ``<![…`` marked
-    sections): abort the fast scan; dom.parse_document falls back to
-    the stdlib path, so equivalence holds by construction."""
+# _markupbase: _declname_match (name captured), _markedsectionclose,
+# _msmarkedsectionclose and parse_marked_section's keyword sets
+_DECLNAME_RE = re.compile(r"([a-zA-Z][-_.a-zA-Z0-9]*)\s*")
+_MARKED_SECTION_CLOSE = {
+    **dict.fromkeys(("temp", "cdata", "ignore", "include", "rcdata"),
+                    re.compile(r"]\s*]\s*>")),
+    **dict.fromkeys(("if", "else", "endif"), re.compile(r"]\s*>")),
+}
 
 
 def scan(html: str, sink) -> None:
@@ -331,10 +340,26 @@ def scan(html: str, sink) -> None:
                 pos = end.end()
                 continue
             if html.startswith("<![", lt):
-                # marked section / MS conditional: stdlib
-                # parse_marked_section semantics (incl. its error
-                # paths) are not worth fast-pathing — bail out
-                raise Bailout("marked section")
+                # marked section / MS conditional (stdlib
+                # parse_marked_section): the content is skipped, and
+                # unknown_decl is a no-op for the DOM sink
+                name = _DECLNAME_RE.match(html, lt + 3)
+                if lt + 3 == n or (name is not None and name.end() == n):
+                    pos = eof_recover(lt)  # _scan_name: end of buffer
+                    continue
+                close_re = name and _MARKED_SECTION_CLOSE.get(
+                    name.group(1).lower())
+                if close_re is None:
+                    # stdlib raises AssertionError here (no name, or an
+                    # unknown keyword): keep what parsed, stop
+                    sink.malformed = True
+                    return
+                close = close_re.search(html, lt + 3)
+                if close is None:
+                    pos = eof_recover(lt)
+                    continue
+                pos = close.end()
+                continue
             if html[lt + 2:lt + 9].lower() == "doctype":
                 gt = find(">", lt + 9)
                 if gt < 0:

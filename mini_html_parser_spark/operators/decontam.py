@@ -59,13 +59,6 @@ def ngrams_of_tokens(toks: Column, n: int = 3) -> Column:
     )
 
 
-def word_ngram_set(text_col: Column, n: int = 3) -> Column:
-    """Distinct word n-grams of a TEXT column.  Only for one-shot /
-    small-side use — for the corpus-scale path pre-project the token
-    array and use :func:`ngrams_of_tokens` (see its docstring)."""
-    return ngrams_of_tokens(F.split(F.trim(text_col), _WS), n)
-
-
 def decontaminate(
     docs: DataFrame,
     bench: DataFrame,

@@ -13,16 +13,12 @@ reference emitting ``img`` as a zero-length inline span carrying
 ``src`` — reference html_parser.py:75 and the 6 img rows of
 parse_scripts/data_test/wiki_page_metadata.jsonl).
 
-The whole per-document kernel runs inside ONE Arrow-batched pandas
-UDF (SURVEY.md §2A): per-row Python exists only *inside* the
-vectorized batch, never at the DataFrame level.
+The whole per-document kernel runs inside ONE ``mapInArrow`` stage
+(SURVEY.md §2A): per-row Python exists only *inside* the Arrow
+batch, never at the DataFrame level.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -35,7 +31,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..kernel import ExtractionConfig, extract
+from ..kernel import ExtractionConfig
 from ..kernel.config import NAMED_CONFIGS
 from ..kernel.extract import make_extract_fn
 
@@ -91,23 +87,6 @@ def assemble_html(spans) -> str:
     return "".join(parts)
 
 
-def span_to_row(s) -> dict:
-    return {
-        "key": s.key,
-        "type": s.type,
-        "char_start_idx": s.char_start_idx,
-        "relative_start_pos": s.relative_start_pos,
-        "char_end_idx": s.char_end_idx,
-        "relative_end_pos": s.relative_end_pos,
-        "value": s.value,
-        "attrs": list(s.attrs),
-        "attr_values": [v if v is not None else "" for v in s.attr_values],
-        "kind": s.kind,
-        "media_ref": s.media_ref,
-        "offset": s.offset,
-    }
-
-
 def _resolve_config(config) -> ExtractionConfig:
     if isinstance(config, str):
         return NAMED_CONFIGS[config]()
@@ -117,71 +96,20 @@ def _resolve_config(config) -> ExtractionConfig:
 def extract_documents(
     df: DataFrame,
     config: ExtractionConfig | str = "boilerplate_strip",
-    html_col: str | None = None,
     passthrough_cols: list[str] | None = None,
-    engine: str = "arrow",
 ) -> DataFrame:
-    """documents → extracted: the corpus parse job as one narrow stage.
+    """documents → extracted: the corpus parse job as one narrow
+    ``mapInArrow`` stage.
 
-    ``df`` either carries interleaved ``spans`` (input_hint shape) or a
-    raw HTML string column named by ``html_col``.  The kernel runs
-    inside Arrow batches; no shuffle is introduced — partitioning/
-    salting is the caller's concern (see
-    pipeline.repartition_for_extraction).
-
-    ``engine="arrow"`` (default) builds the nested span output as flat
-    Arrow arrays via ``mapInArrow`` — measured ~35% faster end-to-end
-    than the ``mapInPandas`` dict path (``engine="pandas"``), which is
-    kept as the reference implementation and for ``html_col`` inputs.
+    ``df`` carries interleaved ``spans`` (input_hint shape).  The
+    kernel runs inside Arrow batches and the nested span output is
+    built as flat Arrow arrays + offsets, never as per-span Python
+    dicts.  No shuffle is introduced — partitioning/salting is the
+    caller's concern (see pipeline.repartition_for_extraction).
 
     ``passthrough_cols`` are copied verbatim to the output (e.g. the
     salt ``bucket``, so lineage uses the exact partitioning key).
     """
-    if engine == "arrow" and html_col is None:
-        return extract_documents_arrow(df, config, passthrough_cols)
-    cfg = _resolve_config(config)
-    use_spans = html_col is None
-    passthrough = passthrough_cols or []
-    schema = StructType(
-        EXTRACTED_SCHEMA.fields
-        + [df.schema[c] for c in passthrough]
-    )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        extract_one = make_extract_fn(cfg)  # once per task (guide §4.5)
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("doc_id", "text", "spans", "n_spans", "malformed", "n_chars")}
-            htmls = (
-                pdf["spans"].map(assemble_html) if use_spans else pdf[html_col]
-            )
-            for doc_id, html in zip(pdf["doc_id"], htmls):
-                r = extract_one(html if isinstance(html, str) else "")
-                out["doc_id"].append(str(doc_id))
-                out["text"].append(r.text)
-                out["spans"].append([span_to_row(s) for s in r.spans])
-                out["n_spans"].append(len(r.spans))
-                out["malformed"].append(bool(r.malformed))
-                out["n_chars"].append(len(r.text))
-            res = pd.DataFrame(out)
-            for c in passthrough:
-                res[c] = pdf[c].reset_index(drop=True)
-            yield res
-
-    return df.mapInPandas(process, schema=schema)
-
-
-def extract_documents_arrow(
-    df: DataFrame,
-    config: ExtractionConfig | str = "boilerplate_strip",
-    passthrough_cols: list[str] | None = None,
-) -> DataFrame:
-    """``extract_documents`` on the mapInArrow path: span columns are
-    built as flat Arrow arrays + offsets instead of per-span Python
-    dicts fed through pandas — skipping one full conversion layer on
-    the (large) output side.  Semantics identical to
-    ``extract_documents`` (pinned by tests/test_spark_extract.py
-    parity assertions run against both paths)."""
     import pyarrow as pa
 
     from pyspark.sql.pandas.types import to_arrow_schema

@@ -2,13 +2,9 @@
 
 The reference's dataset reducer enumerates every (file, line) and
 draws ``random.sample(indexes, n)`` (parse_scripts/dataset_reducer.py:
-15-39).  Distributed equivalents:
-
-* exact-n without replacement, deterministic: order by a seeded hash
-  of the id and take n — a TakeOrderedAndProject, no full sort
-  materialization;
-* approximate fraction: ``df.sample`` (per-partition Bernoulli, no
-  shuffle at all) for when exactness doesn't matter at scale.
+15-39).  The distributed equivalent is exact-n without replacement,
+deterministic: order by a seeded hash of the id and take n — a
+TakeOrderedAndProject, no full sort materialization.
 """
 
 from __future__ import annotations
@@ -20,10 +16,6 @@ def sample_exact_n(df: DataFrame, n: int, seed: int = 42, id_col: str = "doc_id"
     """Deterministic exact-n sample without replacement."""
     key = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(f"#{seed}")))
     return df.orderBy(key.asc(), F.col(id_col).asc()).limit(n)
-
-
-def sample_fraction(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    return df.sample(withReplacement=False, fraction=fraction, seed=seed)
 
 
 def enumerate_rows(df: DataFrame, partition_col: str, order_col: str) -> DataFrame:

@@ -243,20 +243,6 @@ def windowed_event_agg(
     )
 
 
-def span_rate_monitor(extracted: DataFrame, window: str = "10 seconds") -> DataFrame:
-    """Windowed spans/sec with late-data watermark (stateful demo)."""
-    stamped = extracted.withColumn("ingest_ts", F.current_timestamp())
-    return (
-        stamped.withWatermark("ingest_ts", "30 seconds")
-        .groupBy(F.window("ingest_ts", window))
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum("n_spans").alias("spans"),
-            F.sum(F.col("malformed").cast("long")).alias("malformed"),
-        )
-    )
-
-
 def icelite_batch_writer(
     table_path: str,
     n_buckets: int = 64,

@@ -1,15 +1,24 @@
 """fast_scan ≡ stdlib parser equivalence.
 
-The fast regex scanner must produce the identical DOM for everything
-the engine can meet: the golden corpora, the generator's fragment
-families, and randomized HTML-ish garbage (hypothesis)."""
+The fast regex scanner must produce the identical DOM and
+``malformed`` flag as the stdlib ``html.parser`` oracle
+(tests/kernel_oracle.py) for everything the engine can meet: the
+golden corpora, the generator's fragment families, and randomized
+HTML-ish garbage (hypothesis)."""
+
+import os
 
 import hypothesis
+import pytest
 from hypothesis import given, settings, strategies as st
 
+from kernel_oracle import parse_document_stdlib
 from mini_html_parser_spark.datagen import _doc_spans
 from mini_html_parser_spark.kernel.dom import parse_document
 from mini_html_parser_spark.operators.extract import assemble_html
+from test_wiki_golden import DATA_DIR
+
+REFERENCE_WIKI_PAGE = os.path.join(DATA_DIR, "raw_wiki_page.txt")
 
 
 def dump(node, acc=None):
@@ -21,13 +30,28 @@ def dump(node, acc=None):
 
 
 def assert_equivalent(html):
-    fast_root, _ = parse_document(html, fast=True)
-    std_root, _ = parse_document(html, fast=False)
+    fast_root, fast_malformed = parse_document(html)
+    std_root, std_malformed = parse_document_stdlib(html)
     assert dump(fast_root) == dump(std_root), f"divergence on {html!r}"
+    assert fast_malformed == std_malformed, f"malformed flag on {html!r}"
 
 
 def test_wiki_page_equivalent():
-    with open("/root/reference/parse_scripts/data_test/raw_wiki_page.txt") as f:
+    # a deterministic wiki-class page: whole datagen documents joined
+    # until the page is at least the size of the reference wiki page
+    # (143 KB)
+    parts, size, i = [], 0, 0
+    while size < 143_000:
+        parts.append(assemble_html(_doc_spans(42, i)))
+        size += len(parts[-1])
+        i += 1
+    assert_equivalent("".join(parts))
+
+
+@pytest.mark.skipif(not os.path.exists(REFERENCE_WIKI_PAGE),
+                    reason=f"reference fixture {REFERENCE_WIKI_PAGE} is missing")
+def test_reference_wiki_page_equivalent():
+    with open(REFERENCE_WIKI_PAGE) as f:
         assert_equivalent(f.read())
 
 
@@ -64,6 +88,15 @@ def test_pinned_edge_cases_equivalent():
         "<p>a<!bogus decl>b",
         "<![CDATA[ x > y ]]><p>q</p>",
         "<![if !IE]>x<![endif]>",
+        # marked sections the stdlib rejects or cannot finish: an
+        # unknown keyword or no name stops the parse (text before it
+        # kept, malformed set); a cut-off one is EOF-recovered
+        "a<p>b</p><![bogus[ q ]]>c<p>d",
+        "<p>x<![1 ]]><b>z",
+        "<![",
+        "<![include",
+        "a<![bogus",
+        "<![CDATA[ unterminated <p>a</p>",
         "<p>tail</p", "</p", "<p>a<!unterminated",
         "<ul><li>a<li>b</ul>",
         "<table><tr><td>a<td>b<tr><td>c</table>",
@@ -99,6 +132,8 @@ _tokens = st.sampled_from([
     "</ div>", "</ div x>", "</div x>", "</DIV>", "</1>", "</-x>", "</ >",
     "</p", "<!doctype html>", "<!x y>", "<?pi >", "<style>", "</style>",
     "</STYLE>", "</stylex>",
+    # marked sections: known, MS-conditional, cut-off and unknown
+    "<![CDATA[", "]]>", "<![if IE]>", "<![endif]>", "<![", "<![x[",
 ])
 
 

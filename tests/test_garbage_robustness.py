@@ -10,6 +10,7 @@ examples every run.
 import hypothesis
 from hypothesis import given, settings, strategies as st
 
+from mini_html_parser_spark.kernel import boilerplate_strip_config, extract
 from mini_html_parser_spark.operators.gpt2_bpe import (
     gpt2_count_tokens, gpt2_decode, gpt2_encode, gpt2_pretokenize,
 )
@@ -50,6 +51,19 @@ def test_pdf_never_raises(data):
 def test_pdf_never_raises_with_header(data):
     spans, n_pages, malformed = extract_pdf_spans(b"%PDF-1.4\n" + data)
     assert isinstance(spans, list)
+
+
+# markup-ish characters incl. the '[' ']' of marked sections
+_HTML_SOUP_ALPHABET = "<>/!?-=\"' abPsScCrRiIpPtTyYlLeE&;#x1[]\n"
+
+
+@given(st.one_of(st.text(max_size=400),
+                 st.text(alphabet=_HTML_SOUP_ALPHABET, max_size=200)))
+@settings(**_SETTINGS)
+def test_html_kernel_never_raises(html):
+    result = extract(html, boilerplate_strip_config())
+    assert isinstance(result.text, str)
+    assert isinstance(result.malformed, bool)
 
 
 @given(st.text(max_size=400))

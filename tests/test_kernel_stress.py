@@ -40,3 +40,14 @@ def test_adversarial_shape_is_graceful(name):
         assert result.malformed and result.text == ""
     else:
         assert result.text  # real content extracted
+
+
+def test_unknown_marked_section_keeps_text_before_it():
+    # the stdlib tokenizer rejects an unknown marked-section keyword;
+    # the scan stops there and keeps everything parsed before it
+    result = extract(
+        "<html><body><p>kept text</p><![bogus[ x ]]><p>after</p></body></html>",
+        CFG,
+    )
+    assert result.malformed
+    assert result.text == "kept text\n"
